@@ -1,6 +1,6 @@
 package graft.ds
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -11,30 +11,17 @@ import org.apache.spark.sql.functions._
   * id" or "remove everything matching this predicate", and rewriting
   * the whole dataset per purge is O(lake).
   *
-  * Scale shape — identical to the partition-scoped upsert
-  * ([[DatasetWriter.upsertPartitionScoped]]), because the directory is
-  * this lake's atomic unit (vacuum knows how to restore `__swap_old`
-  * directory backups; nothing restores torn file sets):
-  *  - ONE pruned scan finds where doomed rows live (predicate pushdown
-  *    reaches the parquet scan for `deleteWhere`; the keyed variant
-  *    pays one semi-join). Untouched partitions are never read fully,
-  *    rewritten, or renamed.
-  *  - Only partitions CONTAINING doomed rows are rewritten, via staged
-  *    write + per-directory backup swap. Partitions emptied entirely
-  *    are deleted without a rewrite.
-  *  - Unpartitioned datasets rewrite via root swap — O(dataset), same
-  *    as their upsert, and the reason big mutable datasets should be
-  *    hive-partitioned.
-  *
-  * Crash consistency (per directory, same story as upsert): a crash
-  * mid-promotion leaves each affected partition either old or new,
-  * individually consistent, with `.…__swap_old` backups vacuum can
-  * restore. A re-run of the same delete converges (doomed rows already
-  * gone count zero).
+  * Scale shape: ONE pruned scan finds where doomed rows live (predicate
+  * pushdown reaches the parquet scan for `deleteWhere`; the keyed variant
+  * pays one semi-join). A hive-partitioned dataset rewrites only the
+  * partitions holding doomed rows and drops those emptied entirely;
+  * an unpartitioned one rewrites its root — O(dataset), the reason big
+  * mutable datasets should be partitioned. The rewrite commits through
+  * [[StagedRewrite]] (crash story there).
   *
   * Bloom sidecar: deleting rows can only SHRINK the live key set, so an
   * existing [[BloomIndex]] stays a superset — deleted keys linger as
-  * false positives (an anti-join probe each). Both paths bump the
+  * false positives (an anti-join probe each). The delete bumps the
   * sidecar's deleted-count, so the occupancy trigger rebuilds the
   * filter over live rows once cumulative churn exceeds its budget.
   *
@@ -107,7 +94,8 @@ object DatasetDelete {
     * rows to keep; `earlyEmpty` = a cheap in-lock check that the doomed
     * set is provably empty (bloom-probed key list) BEFORE any dataset
     * scan is planned. Runs under the dataset lock — a delete racing an
-    * upsert/compact would interleave staged renames. */
+    * upsert/compact would interleave staged renames. Stages with the
+    * dataset's full layout, time buckets included. */
   private def deleteCore(spark: SparkSession, target: GraftDataset,
       doomedWithFile: DataFrame => DataFrame,
       keptOf: DataFrame => DataFrame,
@@ -116,124 +104,33 @@ object DatasetDelete {
     val root = new Path(target.path)
     if (!fs.exists(root)) return 0L
     DatasetLock.withLock(fs, root) {
-      if (target.dataFiles(spark).isEmpty) 0L
-      else if (earlyEmpty()) 0L
+      if (target.dataFiles(spark).isEmpty || earlyEmpty()) 0L
       else {
         val existing = target.df(spark)
-        val partCols = target.partitioning
-        if (partCols.isEmpty) deleteRootSwap(spark, fs, root, target, doomedWithFile, keptOf, existing)
-        else deletePartitionScoped(spark, fs, root, target, doomedWithFile, keptOf, existing)
+        val layout = StagedRewrite.layout(fs, target)
+        val (doomed, scope, scan) =
+          if (layout.isEmpty) (doomedWithFile(existing).count(), StagedRewrite.Scope.Root, existing)
+          else {
+            // ONE job: per (partition values, file) doomed-row counts —
+            // the scope's dirs and predicate, and the return value
+            val matched = doomedWithFile(existing)
+              .groupBy(layout.map(col) :+ col("__f"): _*)
+              .agg(count(lit(1)).as("__n"))
+              .collect().toSeq
+            val (s, pred) = StagedRewrite.partitionScope(fs, root, layout, matched)
+            (matched.map(_.getLong(layout.length + 1)).sum, s, existing.filter(pred))
+          }
+        if (doomed > 0) {
+          val staged = GraftDataset(target.path, format = target.format,
+            partitioning = layout, compression = target.compression)
+          StagedRewrite.commit(spark, target, StagedRewrite.DeleteTmp, scope,
+            DatasetWriter(staged, clusterBy = target.clusterBy),
+            keptOf(scan),
+            StagedRewrite.Bloom.Update(BloomIndex.load(fs, target.path)
+              .map(idx => idx.copy(deleted = idx.deleted + doomed))))
+        }
+        doomed
       }
     }
-  }
-
-  /** Unpartitioned: staged rewrite of kept rows + atomic root swap. */
-  private def deleteRootSwap(spark: SparkSession, fs: FileSystem, root: Path,
-      target: GraftDataset, doomedWithFile: DataFrame => DataFrame,
-      keptOf: DataFrame => DataFrame, existing: DataFrame): Long = {
-    val doomed = doomedWithFile(existing).count()
-    if (doomed == 0) return 0L
-    val tmp = new Path(root.getParent, s".${root.getName}__delete_tmp")
-    fs.delete(tmp, true)
-    val staged = GraftDataset(tmp.toString, format = target.format,
-      compression = target.compression)
-    // kept scans the LIVE target lazily — the staged write must fully
-    // materialize before the swap touches it. The bloom contract rides
-    // the staged writer: options re-applied, contract file staged and
-    // promoted with the data.
-    DatasetWriter(staged, WriteMode.Overwrite,
-      clusterBy = target.clusterBy,
-      rowGroupBloom = RowGroupBloom.load(fs, target.path), locking = false)
-      .write(spark, keptOf(existing))
-    // the sidecars live inside the root and would die in the swap. The
-    // bloom filter carries with its deleted-count bumped: the filter
-    // stays a superset (deleted keys linger as false positives), and
-    // the bump lets the occupancy trigger rebuild it once churn
-    // exceeds the budget; the stats index names only dead files —
-    // remember its columns and rebuild instead
-    val carried = BloomIndex.load(fs, target.path).map { idx =>
-      val bumped = idx.copy(deleted = idx.deleted + doomed)
-      BloomIndex.write(fs, tmp.toString, bumped)
-      bumped
-    }
-    val statCols = StatsIndex.loadCached(fs, target.path).map(_.cols)
-    DatasetWriter.swapInPlace(fs, tmp, root)
-    statCols.foreach(cs => StatsIndex.build(spark, target, cs))
-    carried.foreach(idx => BloomIndex.rebuildIfOverBudget(spark, target, idx))
-    doomed
-  }
-
-  /** Hive-partitioned: rewrite ONLY partitions holding doomed rows. */
-  private def deletePartitionScoped(spark: SparkSession, fs: FileSystem, root: Path,
-      target: GraftDataset, doomedWithFile: DataFrame => DataFrame,
-      keptOf: DataFrame => DataFrame, existing: DataFrame): Long = {
-    val partCols = target.partitioning
-    val qualifiedRoot = fs.makeQualified(root).toString
-    // ONE job: per (partition values, file) doomed-row counts — the
-    // partition VALUES drive the pruned kept-scan predicate, the FILE
-    // paths give directory identity without re-implementing hive value
-    // encoding (same trick as upsert), and the counts sum to the
-    // return value
-    val matched = doomedWithFile(existing)
-      .groupBy(partCols.map(col) :+ col("__f"): _*)
-      .agg(count(lit(1)).as("__n"))
-      .collect()
-    if (matched.isEmpty) return 0L
-    require(matched.forall(r => r.getString(partCols.length).nonEmpty),
-      "delete: input_file_name() returned an empty path for a matched row")
-    val doomed = matched.map(_.getLong(partCols.length + 1)).sum
-    val matchedDirs = matched.map { r =>
-      val parent = fs.makeQualified(new Path(r.getString(partCols.length))).getParent.toString
-      require(parent.startsWith(qualifiedRoot + "/"),
-        s"delete: matched file $parent outside dataset root $qualifiedRoot")
-      parent.stripPrefix(qualifiedRoot + "/")
-    }.toSet
-    val affectedVals = matched.map(_.toSeq.dropRight(2)).distinct
-    val affectedPred = affectedVals
-      .map(vs => partCols.zip(vs).map { case (c, v) => col(c) <=> lit(v) }.reduce(_ && _))
-      .reduce(_ || _)
-
-    // staged rewrite of the affected partitions' KEPT rows only — the
-    // OR-of-equalities partition predicate folds into PartitionFilters,
-    // so unaffected partitions are never read
-    val tmp = new Path(root.getParent, s".${root.getName}__delete_tmp")
-    fs.delete(tmp, true)
-    val staged = GraftDataset(tmp.toString, format = target.format,
-      partitioning = partCols, compression = target.compression)
-    DatasetWriter(staged, WriteMode.Overwrite,
-      clusterBy = target.clusterBy,
-      rowGroupBloom = RowGroupBloom.load(fs, target.path), locking = false)
-      .write(spark, keptOf(existing.filter(affectedPred)))
-
-    val stagedLeaves = DatasetWriter.hiveLeafDirs(fs, tmp, partCols.length)
-    val stagedRel = stagedLeaves.map(p =>
-      fs.makeQualified(p).toString.stripPrefix(fs.makeQualified(tmp).toString + "/"))
-    // partitions whose EVERY row was doomed produce no staged dir —
-    // delete them outright (removing doomed rows early is exactly the
-    // intended effect; a crash here leaves a consistent prefix)
-    (matchedDirs -- stagedRel).foreach(rel => fs.delete(new Path(root, rel), true))
-    stagedLeaves.zip(stagedRel).foreach { case (src, rel) =>
-      val live = new Path(root, rel)
-      if (fs.exists(live)) DatasetWriter.swapInPlace(fs, src, live)
-      else {
-        // affected partition whose dir name changed spelling is
-        // impossible (values came FROM these dirs) — but a rewrite may
-        // legitimately hit a dir vacuumed between jobs; plain rename
-        fs.mkdirs(live.getParent)
-        require(fs.rename(src, live), s"delete: cannot promote $src to $live")
-      }
-    }
-    fs.delete(tmp, true)
-    // drop stats entries for rewritten/deleted files, index the staged
-    // ones — O(staged files) footer IO inside the lock we already hold
-    StatsIndex.maintain(spark, target)
-    // partition swaps leave the root sidecar in place — bump its
-    // deleted count so purge churn feeds the occupancy rebuild (the
-    // filter itself stays a valid superset throughout)
-    BloomIndex.load(fs, target.path).foreach { idx =>
-      val bumped = BloomIndex.recordDeleted(fs, target.path, idx, doomed)
-      BloomIndex.rebuildIfOverBudget(spark, target, bumped)
-    }
-    doomed
   }
 }

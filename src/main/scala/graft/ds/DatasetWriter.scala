@@ -76,11 +76,7 @@ final case class DatasetWriter(
     rowGroupBloom: Seq[(String, Option[Long])] = Nil,
     // explicit contract OPT-OUT — see [[withoutRowGroupBloom]]
     rowGroupBloomOff: Boolean = false,
-    transform: DataFrame => DataFrame = identity,
-    // internal staged writes (upsert/repartition temps) run under the
-    // PARENT operation's lock — locking their own tmp path would only
-    // add RPCs; every user-facing writer keeps the default true
-    locking: Boolean = true) {
+    transform: DataFrame => DataFrame = identity) {
 
   def withMode(m: WriteMode): DatasetWriter = copy(mode = m)
   def withBatchRows(n: Long): DatasetWriter = copy(batchRows = Some(n))
@@ -123,19 +119,21 @@ final case class DatasetWriter(
     * [[DatasetLock]] — concurrent writers queue instead of interleaving
     * staged renames (which silently drops one writer's rows). */
   def write(spark: SparkSession, input: DataFrame): Long =
-    if (!locking) writeBody(spark, input)
-    else DatasetLock.withLock(target.fs(spark), new Path(target.path))(writeBody(spark, input))
+    DatasetLock.withLock(target.fs(spark), new Path(target.path))(writeUnlocked(spark, input))
 
   /** Explicit writer bloom columns win; otherwise the dataset's
     * persisted [[RowGroupBloom]] contract applies (parquet-only).
     * [[withoutRowGroupBloom]] overrides both. */
-  private def effectiveRowGroupBloom(fs: FileSystem): Seq[(String, Option[Long])] =
+  private[ds] def effectiveRowGroupBloom(fs: FileSystem): Seq[(String, Option[Long])] =
     if (rowGroupBloomOff) Nil
     else if (rowGroupBloom.nonEmpty) rowGroupBloom
     else if (target.format == "parquet") RowGroupBloom.load(fs, target.path)
     else Nil
 
-  private def writeBody(spark: SparkSession, input: DataFrame): Long = {
+  /** The write without the dataset lock: staged rewrites run under their
+    * parent operation's lock ([[StagedRewrite.commit]]) — locking their
+    * own tmp path would only add RPCs. */
+  private[ds] def writeUnlocked(spark: SparkSession, input: DataFrame): Long = {
     val fs = target.fs(spark)
     val targetPath = new Path(target.path)
     val existed = fs.exists(targetPath) && target.dataFiles(spark).nonEmpty
@@ -164,89 +162,8 @@ final case class DatasetWriter(
         BloomIndex.load(fs, target.path)
       else None
 
-    if (mode == WriteMode.Upsert && existed) {
-      // the writer-generated time bucket reads back as a hive partition
-      // column, but it is DERIVED (recomputed from the ts column when
-      // the merged result re-stages through the same timeBatch writer)
-      // — it is not part of the logical schema the batch must match
-      val existing = {
-        val raw = target.raw(spark)
-        if (timeBatch.isDefined) raw.drop("__time_bucket") else raw
-      }
-      // column agreement is mandatory: the merge rewrites the WHOLE
-      // dataset, so a narrower incoming batch would silently destroy
-      // the missing columns for every row, not just upserted ones
-      require(existing.columns.toSet == prepared.columns.toSet,
-        s"upsert batch columns ${prepared.columns.sorted.mkString(",")} must match " +
-          s"dataset columns ${existing.columns.sorted.mkString(",")}")
-      // ...and so must TYPES: the merge funnels every existing row
-      // through unionByName, so a same-named column at a wider type
-      // (int batch vs long dataset, or vice versa) would silently
-      // rewrite the stored type for ALL rows, not just upserted ones.
-      // Compared via catalogString — nullability flags (top-level and
-      // nested containsNull/valueContainsNull) are NOT type changes.
-      // Partition columns are exempt: their read-back type comes from
-      // directory-name inference (p=10 written from a string reads back
-      // as int), and they re-encode through the same path either way.
-      val existingTypes = existing.schema
-        .filterNot(f => target.partitioning.contains(f.name))
-        .map(f => f.name -> f.dataType).toMap
-      val mismatched = prepared.schema
-        .filter(f => existingTypes.get(f.name)
-          .exists(_.catalogString != f.dataType.catalogString))
-        .map(f => s"${f.name}: batch ${f.dataType.simpleString} vs " +
-          s"dataset ${existingTypes(f.name).simpleString}")
-      require(mismatched.isEmpty,
-        s"upsert batch column types must match the dataset (the merge " +
-          s"rewrite would coerce every stored row): ${mismatched.mkString("; ")}")
-      // persist: the incoming plan feeds both the key snapshot and the
-      // union — re-executing a non-deterministic input between the two
-      // could delete a key's old row without writing its replacement
-      val pinned = prepared.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val keys = pinned.select(deltaSubset.map(col): _*).distinct()
-        // null-safe: a NULL key replaces a NULL key (same rule as delta)
-        val cond = deltaSubset.map(c => existing(c) <=> keys(c)).reduce(_ && _)
-        if (target.partitioning.nonEmpty && timeBatch.isEmpty)
-          return upsertPartitionScoped(spark, fs, targetPath, existing, pinned, keys, cond,
-            sideIdx, rgbContract)
-        val kept = existing.join(keys, cond, "left_anti")
-          .select(pinned.columns.toIndexedSeq.map(col): _*)
-        val merged = kept.unionByName(pinned)
-        // stage the merged dataset, then swap — `merged` scans the live
-        // target lazily, so the target must not be touched until the
-        // staged write has fully materialized
-        val tmp = new Path(targetPath.getParent, s".${targetPath.getName}__upsert_tmp")
-        fs.delete(tmp, true)
-        val staged = GraftDataset(tmp.toString, format = target.format,
-          partitioning = target.partitioning, compression = target.compression)
-        val n = DatasetWriter(staged, WriteMode.Overwrite, batchRows = batchRows,
-          timeBatch = timeBatch, rowGroupSize = rowGroupSize,
-          clusterBy = effectiveClusterBy, rowGroupBloom = rgbContract,
-          locking = false)
-          .write(spark, merged)
-        // the sidecar lives INSIDE the root and would die in the swap —
-        // write the key-merged copy into the STAGED dir so it promotes
-        // atomically with its data. The old post-swap merge left a
-        // crash window where rows were live but their keys were not,
-        // and the next delta re-appended them as duplicates.
-        val mergedIdx = sideIdx.map { idx =>
-          val m = BloomIndex.merged(idx, alignKeys(pinned, idx))
-          BloomIndex.write(fs, tmp.toString, m)
-          m
-        }
-        // the stats sidecar's entries all name files the swap kills —
-        // carrying it would be dead weight; remember its columns and
-        // rebuild over the merged result instead (an O(files) footer
-        // pass after an O(dataset) rewrite — proportionally free)
-        val statCols = StatsIndex.loadCached(fs, target.path).map(_.cols)
-        DatasetWriter.swapInPlace(fs, tmp, targetPath)
-        if (sideIdx.isEmpty && bloomIndex) BloomIndex.build(spark, target, deltaSubset)
-        statCols.foreach(cs => StatsIndex.build(spark, target, cs))
-        mergedIdx.foreach(m => BloomIndex.rebuildIfOverBudget(spark, target, m))
-        return n
-      } finally pinned.unpersist()
-    }
+    if (mode == WriteMode.Upsert && existed)
+      return upsert(spark, fs, prepared, sideIdx, rgbContract)
 
     val (toWrite, saveMode) = mode match {
       case WriteMode.Raise =>
@@ -280,11 +197,11 @@ final case class DatasetWriter(
         // Tumbling [start, start+interval) buckets, reference W8
         // (`writer.py:292-385`); the bucket both batches the write and
         // lands as a hive partition column → later scans prune on it.
-        toWrite.withColumn("__time_bucket", bucketExpr(tsCol, interval))
+        toWrite.withColumn(StagedRewrite.TimeBucket, bucketExpr(tsCol, interval))
       case None => toWrite
     }
 
-    val partCols = target.partitioning ++ (if (timeBatch.isDefined) Seq("__time_bucket") else Nil)
+    val partCols = target.partitioning ++ (if (timeBatch.isDefined) Seq(StagedRewrite.TimeBucket) else Nil)
 
     // Count batching (W7): for an unpartitioned target, repartition to
     // exactly ceil(rows/batch) tasks — every executor writes one bounded
@@ -365,28 +282,12 @@ final case class DatasetWriter(
       case other => w.format(other).save(target.path)
     }
     val written = obs.get("rows").asInstanceOf[Long]
-    // persist the bloom contract beside the data it describes (fresh
-    // dirs — staged rewrites included — get it here, so a staged swap
-    // promotes contract and files together); an explicit opt-out
-    // deletes it — the one API path OUT of a contract
-    if (rowGroupBloomOff && target.format == "parquet")
-      RowGroupBloom.delete(fs, target.path)
-    else if (rgbContract.nonEmpty && target.format == "parquet")
-      RowGroupBloom.write(fs, target.path, rgbContract)
-    // fresh/overwritten datasets get their sidecar AFTER the write (a
-    // build scans the data that just landed); merges already happened
-    // pre-commit above. An existing sidecar is always maintained (its
-    // own recorded columns); a fresh one only when requested.
-    if ((overwrote || sideIdx.isEmpty) && bloomIndex)
-      BloomIndex.build(spark, target, deltaSubset)
-    // stats sidecar stays fresh across ingest: O(new files) footer IO,
-    // no-op unless one was built (an overwrite deleted it with the dir)
-    StatsIndex.maintain(spark, target)
-    // occupancy check AFTER the data commit: the rebuild scans live
-    // rows, and the pre-commit merge above already persisted the
-    // superset either way (crash between commit and rebuild leaves a
-    // degraded-but-correct filter, healed at the next maintained write)
-    mergedIdx.foreach(m => BloomIndex.rebuildIfOverBudget(spark, target, m))
+    // the bloom contract lands beside the data it describes (fresh dirs
+    // — staged rewrites included — get it here, so a staged swap
+    // promotes contract and files together); an existing bloom index
+    // is always maintained, a fresh one only when requested
+    StagedRewrite.refresh(spark, target, contractUpdate(rgbContract),
+      if ((overwrote || sideIdx.isEmpty) && bloomIndex) deltaSubset else Nil, None, mergedIdx)
     written
     } finally {
       if (mode == WriteMode.Delta && existed) toWrite.unpersist()
@@ -405,135 +306,93 @@ final case class DatasetWriter(
     idx.cols.foldLeft(batch)((df, c) =>
       if (df.columns.contains(c)) df else df.withColumn(c, lit(null).cast("string")))
 
-  /** Partition-scoped upsert for hive-partitioned targets: rewrite ONLY
-    * the partitions the merge can touch, not the whole dataset. At
-    * 100 TB a full staged rewrite per upsert is O(dataset); this path is
-    * O(affected partitions) data + ONE column-pruned key/partition scan
-    * of the existing dataset (to find where matched keys currently
-    * live — a key's partition value may change in the batch, which must
-    * delete its old row from the old partition).
-    *
-    * Affected set = partitions present in the incoming batch ∪
-    * partitions holding a matched key. The `kept` scan prunes to that
-    * set via an OR-of-equalities partition predicate (visible as
-    * PartitionFilters at the scan); the staged write contains exactly
-    * the affected partitions, and promotion swaps exactly those
-    * partition DIRECTORIES — every other partition's files are never
-    * read fully, written, or renamed. Directory identity comes from
-    * Spark's own staged layout and `input_file_name()` on matched rows,
-    * so hive value-encoding is never re-implemented here.
-    *
-    * Atomicity granularity is per partition directory (same as Spark's
-    * dynamic partition overwrite): a crash mid-promotion leaves some
-    * partitions new and some old, each individually consistent, with
-    * `.…__swap_old` backups (hidden from scans) for manual recovery.
-    * Partitions emptied by the merge (every matched row moved away) are
-    * deleted BEFORE promotion: a crash in between can make moved keys
-    * briefly absent (healed by re-running the batch) but can never
-    * duplicate a key across its old and new partitions. */
-  private def upsertPartitionScoped(
-      spark: SparkSession, fs: FileSystem, targetPath: Path,
-      existing: DataFrame, pinned: DataFrame,
-      keys: DataFrame, cond: org.apache.spark.sql.Column,
-      sideIdx: Option[BloomIndex.Index],
-      rgb: Seq[(String, Option[Long])]): Long = {
-    val partCols = target.partitioning
-    val qualifiedRoot = fs.makeQualified(targetPath).toString
-    def relDirOf(file: String): String = {
-      val parent = fs.makeQualified(new Path(file)).getParent.toString
-      require(parent.startsWith(qualifiedRoot + "/"),
-        s"upsert: matched file $parent outside dataset root $qualifiedRoot")
-      parent.stripPrefix(qualifiedRoot + "/")
+  /** The contract update [[StagedRewrite.refresh]] persists: an explicit
+    * opt-out ends it (the one API path OUT of a contract), effective
+    * columns (re)write it, none leaves it. */
+  private[ds] def contractUpdate(rgb: Seq[(String, Option[Long])]): Option[Seq[(String, Option[Long])]] =
+    if (rowGroupBloomOff || rgb.nonEmpty) Some(rgb) else None
+
+  /** Keyed merge into an existing dataset: existing rows sharing a key
+    * with the batch are replaced, unmatched keys append, and the result
+    * commits through [[StagedRewrite]] (crash story there). A
+    * hive-partitioned target without time batching rewrites only the
+    * partitions the merge can touch — those the batch writes, plus those
+    * holding a matched key, found by ONE column-pruned key/file scan (a
+    * key's partition value may change in the batch, which must delete
+    * its old row from the old partition). At 100 TB that is O(affected
+    * partitions), not O(dataset). Other targets rewrite the whole root. */
+  private def upsert(spark: SparkSession, fs: FileSystem, prepared: DataFrame,
+      sideIdx: Option[BloomIndex.Index], rgb: Seq[(String, Option[Long])]): Long = {
+    // the writer-generated time bucket reads back as a hive partition
+    // column, but it is DERIVED (recomputed from the ts column when the
+    // merged result re-stages through the same timeBatch writer) — it
+    // is not part of the logical schema the batch must match
+    val existing = {
+      val raw = target.raw(spark)
+      if (timeBatch.isDefined) raw.drop(StagedRewrite.TimeBucket) else raw
     }
-
-    // ONE pruned-column pass over existing: where do matched keys live
-    // (both the partition VALUES for the kept-scan predicate and the
-    // leaf DIRECTORIES for promotion/emptied-dir cleanup).
-    // input_file_name() MUST be projected below the join: it reads the
-    // task's current input file, which is only set in the scan stage —
-    // above a shuffled (non-broadcast) join it evaluates to "" and the
-    // upsert would crash exactly when the key set is too big to
-    // broadcast. It is non-deterministic to Catalyst, so the optimizer
-    // cannot float it above the join either.
-    val exWithFile = existing.withColumn("__f", input_file_name())
-    val matched = exWithFile.join(keys, cond, "left_semi")
-      .select(partCols.map(col) :+ col("__f"): _*)
-      .distinct().collect()
-    require(matched.forall(r => r.getString(partCols.length).nonEmpty),
-      "upsert: input_file_name() returned an empty path for a matched row")
-    val matchedDirs = matched.map(r => relDirOf(r.getString(partCols.length))).toSet
-    val matchedVals = matched.map(r => r.toSeq.dropRight(1)).distinct
-    val incomingVals = pinned.select(partCols.map(col): _*).distinct()
-      .collect().map(_.toSeq)
-    val affectedVals = (matchedVals ++ incomingVals).distinct
-    val keptPred = affectedVals
-      .map(vs => partCols.zip(vs).map { case (c, v) => col(c) <=> lit(v) }.reduce(_ && _))
-      .reduceOption(_ || _).getOrElse(lit(false))
-
-    val kept = existing.filter(keptPred).join(keys, cond, "left_anti")
-      .select(pinned.columns.toIndexedSeq.map(col): _*)
-    val merged = kept.unionByName(pinned)
-
-    val tmp = new Path(targetPath.getParent, s".${targetPath.getName}__upsert_tmp")
-    fs.delete(tmp, true)
-    val staged = GraftDataset(tmp.toString, format = target.format,
-      partitioning = partCols, compression = target.compression)
-    // the staged tmp ROOT (and the contract file the staged write drops
-    // there) is discarded after per-partition promotion — the contract
-    // (threaded from writeBody: ONE sidecar read per write) persists on
-    // the live root below instead
-    val n = DatasetWriter(staged, WriteMode.Overwrite, batchRows = batchRows,
-      rowGroupSize = rowGroupSize, clusterBy = effectiveClusterBy,
-      rowGroupBloom = rgb, locking = false)
-      .write(spark, merged)
-
-    // leaf partition dirs of the staged output (depth = partCols.length)
-    val stagedLeaves = DatasetWriter.hiveLeafDirs(fs, tmp, partCols.length)
-    val stagedRel = stagedLeaves.map(p =>
-      fs.makeQualified(p).toString.stripPrefix(fs.makeQualified(tmp).toString + "/"))
-
-    // Absorb the batch keys BEFORE any partition directory changes:
-    // the superset contract tolerates extra keys (a crash before the
-    // promotions below just leaves false positives) but a crash AFTER
-    // a promotion with the old post-merge order hid freshly-live keys
-    // from the next delta — silent duplicates. Partition swaps leave
-    // the root sidecar in place, so merging here is durable.
-    val mergedIdx = sideIdx.map { idx =>
-      val m = BloomIndex.merged(idx, alignKeys(pinned, idx))
-      BloomIndex.write(fs, target.path, m)
-      m
-    }
-
-    // Partitions that lost their LAST matched row to another partition
-    // and got nothing back hold ONLY rows being moved (unmatched rows
-    // would have put their partition into the staged set). Delete them
-    // BEFORE promotion: a crash in between leaves the moved keys
-    // temporarily ABSENT (re-running the same upsert batch restores
-    // them — the staged data is recomputed from the batch), which
-    // preserves the key-uniqueness invariant. The reverse order would
-    // leave a crashed run with the key duplicated across its old and
-    // new partitions — a wrong-answer state no re-run or vacuum could
-    // detect.
-    (matchedDirs -- stagedRel).foreach(rel => fs.delete(new Path(targetPath, rel), true))
-    // promote each staged partition dir (backup-swap where live exists,
-    // plain rename where the partition is new)
-    stagedLeaves.zip(stagedRel).foreach { case (src, rel) =>
-      val live = new Path(targetPath, rel)
-      if (fs.exists(live)) DatasetWriter.swapInPlace(fs, src, live)
-      else {
-        fs.mkdirs(live.getParent)
-        require(fs.rename(src, live), s"upsert: cannot promote $src to $live")
-      }
-    }
-    fs.delete(tmp, true)
-    if (rowGroupBloomOff && target.format == "parquet")
-      RowGroupBloom.delete(fs, target.path)
-    else if (rgb.nonEmpty && target.format == "parquet")
-      RowGroupBloom.write(fs, target.path, rgb)
-    if (sideIdx.isEmpty && bloomIndex) BloomIndex.build(spark, target, deltaSubset)
-    StatsIndex.maintain(spark, target)
-    mergedIdx.foreach(m => BloomIndex.rebuildIfOverBudget(spark, target, m))
-    n
+    // column agreement is mandatory: the merge rewrites every row in
+    // scope, so a narrower incoming batch would silently destroy the
+    // missing columns for every row, not just upserted ones
+    require(existing.columns.toSet == prepared.columns.toSet,
+      s"upsert batch columns ${prepared.columns.sorted.mkString(",")} must match " +
+        s"dataset columns ${existing.columns.sorted.mkString(",")}")
+    // ...and so must TYPES: the merge funnels every existing row
+    // through unionByName, so a same-named column at a wider type
+    // (int batch vs long dataset, or vice versa) would silently
+    // rewrite the stored type for ALL rows, not just upserted ones.
+    // Compared via catalogString — nullability flags (top-level and
+    // nested containsNull/valueContainsNull) are NOT type changes.
+    // Partition columns are exempt: their read-back type comes from
+    // directory-name inference (p=10 written from a string reads back
+    // as int), and they re-encode through the same path either way.
+    val existingTypes = existing.schema
+      .filterNot(f => target.partitioning.contains(f.name))
+      .map(f => f.name -> f.dataType).toMap
+    val mismatched = prepared.schema
+      .filter(f => existingTypes.get(f.name)
+        .exists(_.catalogString != f.dataType.catalogString))
+      .map(f => s"${f.name}: batch ${f.dataType.simpleString} vs " +
+        s"dataset ${existingTypes(f.name).simpleString}")
+    require(mismatched.isEmpty,
+      s"upsert batch column types must match the dataset (the merge " +
+        s"rewrite would coerce every stored row): ${mismatched.mkString("; ")}")
+    // persist: the incoming plan feeds both the key snapshot and the
+    // union — re-executing a non-deterministic input between the two
+    // could delete a key's old row without writing its replacement
+    val pinned = prepared.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      val keys = pinned.select(deltaSubset.map(col): _*).distinct()
+      // null-safe: a NULL key replaces a NULL key (same rule as delta)
+      val cond = deltaSubset.map(c => existing(c) <=> keys(c)).reduce(_ && _)
+      val partCols = target.partitioning
+      val (scope, scan) =
+        if (partCols.isEmpty || timeBatch.isDefined) (StagedRewrite.Scope.Root, existing)
+        else {
+          // input_file_name() is projected below the join (see
+          // partitionScope); it is non-deterministic to Catalyst, so
+          // the optimizer cannot float it above the join either
+          val matched = existing.withColumn("__f", input_file_name())
+            .join(keys, cond, "left_semi")
+            .select(partCols.map(col) :+ col("__f"): _*)
+            .distinct().collect()
+          val incoming = pinned.select(partCols.map(col): _*).distinct().collect().map(_.toSeq)
+          val (s, pred) = StagedRewrite.partitionScope(fs, new Path(target.path), partCols,
+            matched.toSeq, incoming.toSeq)
+          (s, existing.filter(pred))
+        }
+      val kept = scan.join(keys, cond, "left_anti")
+        .select(pinned.columns.toIndexedSeq.map(col): _*)
+      val layout = GraftDataset(target.path, format = target.format,
+        partitioning = partCols, compression = target.compression)
+      StagedRewrite.commit(spark, target, StagedRewrite.UpsertTmp, scope,
+        DatasetWriter(layout, batchRows = batchRows, timeBatch = timeBatch,
+          rowGroupSize = rowGroupSize, clusterBy = effectiveClusterBy, rowGroupBloom = rgb,
+          rowGroupBloomOff = rowGroupBloomOff),
+        kept.unionByName(pinned),
+        StagedRewrite.Bloom.Update(sideIdx.map(idx => BloomIndex.merged(idx, alignKeys(pinned, idx)))),
+        if (sideIdx.isEmpty && bloomIndex) deltaSubset else Nil).rows
+    } finally pinned.unpersist()
   }
 
   /** Tumbling-window bucket label for `interval` starting at the epoch.
@@ -590,7 +449,7 @@ final case class DatasetWriter(
       // common ingest shape — an all-new batch — then costs O(batch)
       // with ZERO reads of the (100 TB) existing dataset; only possible
       // duplicates (matches + fpp false positives) pay the exact join.
-      // The index arrives pre-loaded from writeBody (one sidecar read
+      // The index arrives pre-loaded from writeUnlocked (one sidecar read
       // per write); only one recorded over exactly these keys probes.
       sideIdx.filter(_.cols == deltaSubset) match {
         case Some(idx) =>
@@ -618,43 +477,12 @@ final case class DatasetWriter(
 }
 
 object DatasetWriter {
-  /** Leaf `col=value` partition directories `depth` levels under `p` —
-    * shared by the partition-scoped upsert and [[Repartition.compact]]
-    * so the hive-tree walk cannot drift between them. Hidden dirs
-    * ("."/"_" prefixes — swap backups, staging, metadata) are skipped:
-    * a leftover `.p=v__swap_old` contains '=' but is NOT a partition,
-    * and treating it as one would compact backup data or derive a
-    * wrong partition value. */
-  private[graft] def hiveLeafDirs(fs: FileSystem, p: Path, depth: Int): Seq[Path] =
-    if (depth == 0) Seq(p)
-    else fs.listStatus(p).toSeq
-      .filter { st =>
-        val n = st.getPath.getName
-        st.isDirectory && n.contains("=") && !n.startsWith(".") && !n.startsWith("_")
-      }
-      .flatMap(st => hiveLeafDirs(fs, st.getPath, depth - 1))
-
   /** zstd needs native codec support for TEXT formats in vanilla
     * Hadoop → csv/json fall back to gzip; parquet and orc compress
-    * zstd internally and keep it. One rule, used by every writer. */
-  private[ds] def resolveCodec(format: String, compression: String): String =
+    * zstd internally and keep it. */
+  private def resolveCodec(format: String, compression: String): String =
     if ((format == "csv" || format == "json") && compression == "zstd") "gzip"
     else compression
-
-  /** Promote a staged rewrite: move `live` aside, promote `tmp`, drop
-    * the backup — roll back if promotion fails. Shared by upsert and
-    * [[Repartition]]'s in-place path. */
-  private[ds] def swapInPlace(fs: FileSystem, tmp: Path, live: Path): Unit = {
-    val backup = new Path(live.getParent, s".${live.getName}__swap_old")
-    fs.delete(backup, true)
-    if (!fs.rename(live, backup))
-      throw new IllegalStateException(s"swap failed: cannot move $live aside")
-    if (!fs.rename(tmp, live)) {
-      fs.rename(backup, live) // roll back
-      throw new IllegalStateException(s"swap failed: cannot promote $tmp")
-    }
-    fs.delete(backup, true)
-  }
 
   /** Schema-unify rewrite (reference W10, `writer.py:529-571`): rewrite
     * files whose physical schema differs from the promoted unified
@@ -692,23 +520,14 @@ object DatasetWriter {
           if (s.fieldNames.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
           else lit(null).cast(f.dataType).as(f.name)
         }
-        val tmp = new Path(ds.path, s"_unify_tmp_${System.nanoTime()}")
+        val tmp = new Path(ds.path, s"${StagedRewrite.UnifyTmpPrefix}${System.nanoTime()}")
         RowGroupBloom.applyOptions(
           df.select(aligned: _*).write.option("compression", ds.compression), rgb)
           .parquet(tmp.toString)
-        // swap order matters: promote the rewritten files FIRST, then
-        // delete originals — a crash between the two duplicates rows
-        // (recoverable) instead of losing the group (not recoverable)
-        fs.listStatus(tmp)
+        val moves = fs.listStatus(tmp).toSeq
           .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-          .foreach { st =>
-            val dst = new Path(parent, st.getPath.getName)
-            // rename returns false instead of throwing on some FSes —
-            // deleting originals after a silent false would lose the group
-            require(fs.rename(st.getPath, dst), s"unify rewrite: rename ${st.getPath} -> $dst failed")
-          }
-        paths.foreach(p => fs.delete(new Path(p), false))
-        fs.delete(tmp, true)
+          .map(st => st.getPath -> new Path(parent, st.getPath.getName))
+        StagedRewrite.promoteFiles(fs, tmp, moves, paths.map(new Path(_)))
       }
     true
   }

@@ -117,7 +117,7 @@ final case class GraftDataset(
     graft.sources.FeatherIO.writeStream(df(spark), outPath)
 
   /** Remove leftover staging/backup directories from crashed rewrites
-    * (upsert/repartition swaps beside the dataset, unify temps inside
+    * ([[StagedRewrite]] swaps beside the dataset, unify temps inside
     * it). Only the well-known staging names are touched — but do NOT
     * run concurrently with writers: an in-flight swap's `__swap_old`
     * backup is the only copy of the live data between its two renames,
@@ -130,9 +130,10 @@ final case class GraftDataset(
     * copies of the data — vacuum then auto-promotes the `__swap_old`
     * backup (rollback to the pre-rewrite state) before cleaning, and
     * refuses outright if only tmp dirs remain rather than deleting
-    * the last copy. Partition-scoped upsert's per-partition backups
-    * (`.p=v__swap_old` inside the tree) get the same treatment: restored
-    * when their live partition dir is missing, deleted otherwise. */
+    * the last copy. Per-partition backups (`.p=v__swap_old` inside the
+    * tree) get the same treatment: restored when their live partition
+    * dir is missing, deleted otherwise. A crashed unify rewrite is
+    * rolled forward or back from its record, so no rows are duplicated. */
   def vacuum(spark: SparkSession): Seq[String] = {
     // vacuum under the dataset lock: the danger it documents — deleting
     // an in-flight swap's backup — is exactly a vacuum racing a writer,
@@ -143,11 +144,10 @@ final case class GraftDataset(
   private def vacuumLocked(spark: SparkSession): Seq[String] = {
     val f = fs(spark)
     val p = new Path(path)
-    val sibSuffixes = Seq("__upsert_tmp", "__swap_old", "__repartition_tmp",
-      "__repartition_old", "__compact_tmp", "__delete_tmp")
-    def sibling(s: String) = new Path(p.getParent, s".${p.getName}$s")
+    val sibSuffixes = StagedRewrite.SiblingSuffixes
+    def sibling(s: String) = StagedRewrite.sibling(p, s)
     if (!f.exists(p)) {
-      val backup = sibling("__swap_old")
+      val backup = sibling(StagedRewrite.SwapOld)
       if (f.exists(backup)) {
         // interrupted swap: the backup IS the dataset — restore it
         if (!f.rename(backup, p))
@@ -173,11 +173,14 @@ final case class GraftDataset(
     val staleLocks = parentListing
       .filter(st => st.isFile &&
         st.getPath.getName.startsWith(s".${p.getName}__lock.stale"))
+    // a crashed schema-unify rewrite: settle its promoted files from the
+    // record before the staging dir goes (see StagedRewrite.recoverFiles)
     val child =
       if (!f.exists(p)) Nil
       else f.listStatus(p).toSeq.filter(st => st.isDirectory &&
-        st.getPath.getName.startsWith("_unify_tmp_"))
-    // Per-PARTITION swap backups from partition-scoped upsert
+        st.getPath.getName.startsWith(StagedRewrite.UnifyTmpPrefix))
+    child.foreach(st => StagedRewrite.recoverFiles(f, st.getPath))
+    // Per-PARTITION swap backups from partition-scoped rewrites
     // (`.p=v__swap_old` beside their partition dir, anywhere in the
     // tree). Same recovery rule as the root: if the live partition dir
     // is gone (crash between the two renames), the backup is the only
@@ -186,18 +189,18 @@ final case class GraftDataset(
     def walkDirs(d: Path): Seq[Path] =
       f.listStatus(d).toSeq.filter(_.isDirectory).map(_.getPath)
         .flatMap(c => c +: walkDirs(c))
-    // swapInPlace ALWAYS dot-prefixes backups — requiring the "." here
+    // StagedRewrite ALWAYS dot-prefixes backups — requiring the "." here
     // is load-bearing: a live partition whose legal value merely ends
-    // in "__swap_old" (hive escaping leaves '_' and letters untouched)
+    // in the backup suffix (hive escaping leaves '_' and letters untouched)
     // must never be treated as a backup, or vacuum would delete or
     // rename real data
     val partBackups =
       if (!f.exists(p)) Nil
       else walkDirs(p).filter(d =>
-        d.getName.startsWith(".") && d.getName.endsWith("__swap_old"))
+        d.getName.startsWith(".") && d.getName.endsWith(StagedRewrite.SwapOld))
     val cleanedBackups = partBackups.flatMap { b =>
       val live = new Path(b.getParent,
-        b.getName.stripPrefix(".").stripSuffix("__swap_old"))
+        b.getName.stripPrefix(".").stripSuffix(StagedRewrite.SwapOld))
       if (f.exists(live)) { f.delete(b, true); Some(b.toString) }
       else {
         if (!f.rename(b, live)) throw new IllegalStateException(

@@ -29,30 +29,15 @@ object Repartition {
     // a concurrent swap deletes its files mid-job (or worse, with
     // ignoreMissingFiles=true, silently rewrites a PARTIAL dataset)
     if (inPlace) {
-      // In-place rewrite: stage into a sibling temp dir, then swap —
-      // under the dataset lock so a concurrent upsert/compact can't
-      // interleave with the stage-read or the swap renames
+      // In-place rewrite: staged rewrite + root swap under the dataset
+      // lock, so a concurrent upsert/compact can't interleave with the
+      // stage-read or the swap renames. A repartition pipeline only
+      // keeps or drops rows, so the bloom sidecar stays a key superset.
       val fs = source.fs(spark)
       DatasetLock.withLock(fs, new Path(dest.path)) {
-        val df = source.df(spark)
-        val tmpPath = new Path(new Path(dest.path).getParent,
-          s".${new Path(dest.path).getName}__repartition_tmp")
-        fs.delete(tmpPath, true)
-        val staged = dest.copy(path = tmpPath.toString)
-        val n = DatasetWriter(staged, WriteMode.Overwrite, batchRows = batchRows,
-          timeBatch = timeBatch,
-          rowGroupBloom = RowGroupBloom.load(fs, source.path), locking = false)
-          .write(spark, df)
-        // carry the bloom sidecar (a repartition pipeline only keeps or
-        // drops rows — dedup/distinct/filter — so the old filter stays
-        // a key superset); rebuild the stats index, whose entries all
-        // name files the swap kills
-        BloomIndex.load(fs, source.path).foreach(idx =>
-          BloomIndex.write(fs, tmpPath.toString, idx))
-        val statCols = StatsIndex.loadCached(fs, source.path).map(_.cols)
-        DatasetWriter.swapInPlace(fs, tmpPath, new Path(dest.path))
-        statCols.foreach(cs => StatsIndex.build(spark, dest, cs))
-        n
+        StagedRewrite.commit(spark, dest, StagedRewrite.RepartitionTmp, StagedRewrite.Scope.Root,
+          DatasetWriter(dest, batchRows = batchRows, timeBatch = timeBatch),
+          source.df(spark)).rows
       }
     } else if (deleteSource) {
       // move semantics: listing, copy and delete are one critical
@@ -130,16 +115,17 @@ object Repartition {
     *    groups can only MERGE buckets (fewer, larger files), never
     *    split them, so the post-compaction file count per partition is
     *    ≤ the plan's target and always < the pre-compaction count.
-    *  - Promotion reuses the per-partition-directory atomic swap from
-    *    the partition-scoped upsert: crash mid-promotion leaves each
-    *    partition individually consistent with a `.…__swap_old` backup
-    *    that [[GraftDataset.vacuum]] knows how to restore or clean.
+    *  - The rewrite commits through [[StagedRewrite]] (crash story
+    *    there), staged with the dataset's full layout, time buckets
+    *    included.
     *
     * Hive value parsing: qualifying partitions are matched by
     * string-compare of the partition column against the URL-decoded
     * directory value (`col.cast("string") <=> lit(value)`), which
     * Catalyst still folds into PartitionFilters; `__HIVE_DEFAULT_
-    * PARTITION__` maps to an IS NULL match. */
+    * PARTITION__` maps to an IS NULL match. A dir whose value partition
+    * type inference re-spells (`m=01` reads back as 1) matches no rows
+    * and is left alone ([[StagedRewrite.Scope.SameDirs]]). */
   def compact(
       spark: SparkSession,
       ds: GraftDataset,
@@ -158,9 +144,9 @@ object Repartition {
     import org.apache.spark.sql.functions._
     val fs = ds.fs(spark)
     val root = new Path(ds.path)
-    val parts = ds.partitioning
+    val parts = StagedRewrite.layout(fs, ds)
 
-    def leafDirs(p: Path, d: Int): Seq[Path] = DatasetWriter.hiveLeafDirs(fs, p, d)
+    def leafDirs(p: Path, d: Int): Seq[Path] = StagedRewrite.leafDirs(fs, p, d)
     def dataFiles(p: Path) = fs.listStatus(p).toSeq.filter(st => st.isFile &&
       !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith("."))
 
@@ -176,103 +162,62 @@ object Repartition {
     val todo = plan.filter { case (_, have, want) => have > want }
     if (todo.isEmpty) return CompactStats(0, before, before)
 
-    val tmp = new Path(root.getParent, s".${root.getName}__compact_tmp")
-    fs.delete(tmp, true)
     val df = ds.df(spark)
     val dataCols = df.columns.filterNot(parts.contains)
-    val codec = DatasetWriter.resolveCodec(ds.format, ds.compression)
 
-    // compaction must not shed the dataset's bloom contract: re-apply
-    // the persisted options to the staged rewrite
-    val rgb = if (ds.format == "parquet") RowGroupBloom.load(fs, ds.path) else Nil
-
-    def writeStaged(arranged: org.apache.spark.sql.DataFrame): Unit = {
-      var w = arranged.write.mode("overwrite").option("compression", codec)
-      w = RowGroupBloom.applyOptions(w, rgb)
-      if (parts.nonEmpty) w = w.partitionBy(parts: _*)
-      ds.format match {
-        case "parquet" => w.parquet(tmp.toString)
-        case "csv" => w.option("header", "true").csv(tmp.toString)
-        case other => w.format(other).save(tmp.toString)
-      }
-    }
-
-    // preserve the dataset's clustering contract through the rewrite:
-    // without this, every maintenance sweep silently undoes the
-    // row-group layout the writes paid for (task-local sort, no shuffle)
-    def clustered(d: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-      if (ds.clusterBy.isEmpty) d
-      else d.sortWithinPartitions((parts ++ ds.clusterBy).map(col): _*)
-
-    var promoted = 0
-    if (parts.isEmpty) {
+    val (scope, arranged) =
       // whole-dataset compaction: one bounded-width rewrite + root swap
-      writeStaged(clustered(df.repartition(todo.head._3)))
-      // the sidecars live inside the root the swap replaces. Compaction
-      // preserves rows exactly, so the bloom filter carries unchanged
-      // (still a superset); the stats index names only dying files —
-      // remember its columns and rebuild over the compacted result
-      BloomIndex.load(fs, ds.path).foreach(idx => BloomIndex.write(fs, tmp.toString, idx))
-      if (rgb.nonEmpty) RowGroupBloom.write(fs, tmp.toString, rgb)
-      val statCols = StatsIndex.loadCached(fs, ds.path).map(_.cols)
-      DatasetWriter.swapInPlace(fs, tmp, root)
-      statCols.foreach(cs => StatsIndex.build(spark, ds, cs))
-      promoted = 1
-    } else {
-      // decode `col=value` path segments → (string values..., want).
-      // Spark's own hive unescape (%XX only) — URLDecoder would also
-      // turn a literal '+' into a space, silently skipping (or worse,
-      // colliding) partitions whose value contains '+'
-      def decode(seg: String): String =
-        org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-          .unescapePathName(seg.substring(seg.indexOf('=') + 1))
-      val wantRows = todo.map { case (rel, _, want) =>
-        org.apache.spark.sql.Row.fromSeq(rel.split('/').toSeq.map(decode) :+ want)
-      }
-      val keyCols = parts.map(c => s"__k_$c")
-      val wantSchema = org.apache.spark.sql.types.StructType(
-        keyCols.map(org.apache.spark.sql.types.StructField(_,
-          org.apache.spark.sql.types.StringType)) :+
-          org.apache.spark.sql.types.StructField("__want",
-            org.apache.spark.sql.types.IntegerType))
-      val wantDf = spark.createDataFrame(
-        spark.sparkContext.parallelize(wantRows, 1), wantSchema)
+      if (parts.isEmpty) (StagedRewrite.Scope.Root, df.repartition(todo.head._3))
+      else {
+        // decode `col=value` path segments → (string values..., want).
+        // Spark's own hive unescape (%XX only) — URLDecoder would also
+        // turn a literal '+' into a space, silently skipping (or worse,
+        // colliding) partitions whose value contains '+'
+        def decode(seg: String): String =
+          org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+            .unescapePathName(seg.substring(seg.indexOf('=') + 1))
+        val wantRows = todo.map { case (rel, _, want) =>
+          org.apache.spark.sql.Row.fromSeq(rel.split('/').toSeq.map(decode) :+ want)
+        }
+        val keyCols = parts.map(c => s"__k_$c")
+        val wantSchema = org.apache.spark.sql.types.StructType(
+          keyCols.map(org.apache.spark.sql.types.StructField(_,
+            org.apache.spark.sql.types.StringType)) :+
+            org.apache.spark.sql.types.StructField("__want",
+              org.apache.spark.sql.types.IntegerType))
+        val wantDf = spark.createDataFrame(
+          spark.sparkContext.parallelize(wantRows, 1), wantSchema)
 
-      val hiveNull = "__HIVE_DEFAULT_PARTITION__"
-      val pruned = df.filter(todo.map { case (rel, _, _) =>
-        parts.zip(rel.split('/').map(decode)).map { case (c, v) =>
-          if (v == hiveNull) col(c).isNull else col(c).cast("string") <=> lit(v)
-        }.reduce(_ && _)
-      }.reduce(_ || _))
+        val hiveNull = "__HIVE_DEFAULT_PARTITION__"
+        val pruned = df.filter(todo.map { case (rel, _, _) =>
+          parts.zip(rel.split('/').map(decode)).map { case (c, v) =>
+            if (v == hiveNull) col(c).isNull else col(c).cast("string") <=> lit(v)
+          }.reduce(_ && _)
+        }.reduce(_ || _))
 
-      val keyed = parts.zip(keyCols).foldLeft(pruned) { case (d, (c, k)) =>
-        d.withColumn(k, when(col(c).isNull, lit(hiveNull)).otherwise(col(c).cast("string")))
+        val keyed = parts.zip(keyCols).foldLeft(pruned) { case (d, (c, k)) =>
+          d.withColumn(k, when(col(c).isNull, lit(hiveNull)).otherwise(col(c).cast("string")))
+        }
+        val salted = keyed
+          .join(broadcast(wantDf), keyCols.map(k => keyed(k) <=> wantDf(k)).reduce(_ && _))
+          .withColumn("__salt",
+            pmod(xxhash64(struct(dataCols.toIndexedSeq.map(col): _*)), col("__want").cast("long")))
+        val totalWant = todo.map(_._3).sum
+        (StagedRewrite.Scope.SameDirs(todo.map(_._1).toSet), salted
+          .repartition(totalWant, (parts.map(col) :+ col("__salt")): _*)
+          .select(df.columns.toIndexedSeq.map(col): _*))
       }
-      val salted = keyed
-        .join(broadcast(wantDf), keyCols.map(k => keyed(k) <=> wantDf(k)).reduce(_ && _))
-        .withColumn("__salt",
-          pmod(xxhash64(struct(dataCols.toIndexedSeq.map(col): _*)), col("__want").cast("long")))
-      val totalWant = todo.map(_._3).sum
-      val arranged = salted
-        .repartition(totalWant, (parts.map(col) :+ col("__salt")): _*)
-        .select(df.columns.toIndexedSeq.map(col): _*)
-      writeStaged(clustered(arranged))
-
-      todo.foreach { case (rel, _, _) =>
-        val src = new Path(tmp, rel)
-        val live = new Path(root, rel)
-        // a qualifying partition whose files held zero rows stages
-        // nothing — leave its live dir alone rather than swap with air
-        if (fs.exists(src)) { DatasetWriter.swapInPlace(fs, src, live); promoted += 1 }
-      }
-      fs.delete(tmp, true)
-    }
+    // the staged writer keeps the dataset's clustering contract (a
+    // task-local sort, no shuffle) and inherits its persisted bloom
+    // contract: a maintenance sweep must not undo the layout the writes
+    // paid for. Compaction preserves rows, so the bloom index carries.
+    val staged = GraftDataset(ds.path, format = ds.format, partitioning = parts,
+      compression = ds.compression)
+    val promoted = StagedRewrite.commit(spark, ds, StagedRewrite.CompactTmp, scope,
+      DatasetWriter(staged, clusterBy = ds.clusterBy), arranged).dirs
     val after = leafDirs(root, parts.length).map(dataFiles(_).size.toLong).sum
-    // compaction minted new file names — keep the stats sidecar fresh
-    // (O(new files) footer IO, no-op when none was built)
-    if (promoted > 0) StatsIndex.maintain(spark, ds)
-    // count PROMOTED swaps, not planned ones — a skipped partition
-    // (zero staged rows) must not read as compacted work
+    // count PROMOTED directories, not planned ones — a planned dir the
+    // stage missed or re-spelled is left alone and is not compacted work
     CompactStats(promoted, before, after)
   }
 }

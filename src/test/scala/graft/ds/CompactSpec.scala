@@ -109,6 +109,23 @@ class CompactSpec extends AnyFunSuite {
     assert(got == data.as[(Long, Option[String])].collect().toSet)
   }
 
+  test("a value partition type inference re-spells (m=01) keeps its dir and rows") {
+    val dir = freshDir()
+    val ds = GraftDataset(dir, partitioning = Seq("m"))
+    // "01" is written from a string but reads back as int 1, which Spark
+    // would write as m=1: the rewrite must neither drop nor rename m=01
+    val data = ((1 to 10).map(i => (i.toLong, "01")) ++
+      (11 to 20).map(i => (i.toLong, "02"))).toDF("id", "m")
+    DatasetWriter(ds, WriteMode.Overwrite, batchRows = Some(2L)).write(spark, data)
+    assert(filesIn(s"$dir/m=01").size >= 3)
+    Repartition.compact(spark, ds)
+    val dirs = new java.io.File(dir).listFiles().filter(_.isDirectory).map(_.getName).toSet
+    assert(dirs == Set("m=01", "m=02"))
+    for (m <- Seq("01", "02"))
+      assert(spark.read.parquet(s"$dir/m=$m").count() == 10, s"m=$m lost rows")
+    assert(ds.df(spark).select("id").as[Long].collect().sorted.toSeq == (1L to 20L))
+  }
+
   test("a literal '+' in a partition value compacts (no url-decode mangling)") {
     val dir = freshDir()
     val ds = GraftDataset(dir, partitioning = Seq("p"))
